@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE
-JSON line: {"metric", "value" (total sec), "unit", "queries" {name: sec}, "sf",
-plus derived throughputs}.
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on) with a driver of $SPARK_GRAFT_DRIVER_MEM (default: half the
+host's MemTotal, in whole GB) and prints ONE JSON line: {"metric", "value"
+(total sec), "unit", "queries" {name: sec}, "sf", plus derived throughputs}.
 
 Each query is fully materialized through the noop sink (no driver collect).
 """
@@ -52,9 +53,18 @@ BENCH_QUERIES = [
 BASELINE_QUERIES = ["knn_bruteforce"]
 
 
+def _half_mem_total() -> str:
+    """Half of /proc/meminfo MemTotal as a Spark size string: the local-mode
+    driver JVM runs every task; the Python workers need the other half."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal"))
+    return f"{max(1, kb // (2 * 1024 * 1024))}g"
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     sf = sf_dir.rstrip("/").split("/")[-1]
 
     from pyspark.sql import SparkSession
@@ -69,7 +79,8 @@ def main():
              .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
              .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
              .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+             .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                     or _half_mem_total())
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

@@ -4,8 +4,10 @@ Re-expresses the semantics of Planetiler (reference: /root/reference, Java) as a
 idiomatic Spark pipeline:
 
   read sources -> profile flatMap (Arrow UDFs) -> explode per zoom/tile
-  -> repartitionByRange(sort_key) shuffle  (== reference external merge sort)
-  -> groupBy(tile_id).applyInPandas(reduce) (== reference TileArchiveWriter)
+  -> exact range exchange on analytic partition tokens + per-partition sort
+     (== reference external merge sort; operators/partitioning.py)
+  -> consecutive same-tile runs reduced in mapInArrow
+     (== reference FeatureGroup.groupIntoTiles + TileArchiveWriter)
   -> tiles sink (parquet / files / stats)
 
 All geometry + tile math is vectorized numpy inside Arrow-batched pandas UDFs

@@ -24,7 +24,7 @@ from ..kernels import geom as gk
 from ..kernels import lines as lk
 from ..kernels import tile_math as tm
 from . import render as R
-from .tile_pipeline import _grouped_by_tile
+from . import partitioning as pt
 
 LINE_FEATURES_SCHEMA = ("key long, tile_id long, zoom int, zone_id string, "
                         "kind string, scale int, parts binary")
@@ -76,7 +76,8 @@ def merge_tile_lines(feats: DataFrame, min_length: float = 0.0,
     (mergeLineStrings semantics) — returns merge stats per group so results
     stay verifiable without shipping geometry."""
 
-    def reduce_tiles(pdf: pd.DataFrame):
+    def reduce_tiles(tbl):
+        pdf = tbl.to_pandas()
         out = {k: [] for k in ("tile_id", "zoom", "zone_id", "kind",
                                "n_pieces", "n_merged", "len_before", "len_after")}
         for (tid, zid), grp in pdf.groupby(["tile_id", "zone_id"], sort=True):
@@ -101,11 +102,10 @@ def merge_tile_lines(feats: DataFrame, min_length: float = 0.0,
             out["n_merged"].append(len(merged))
             out["len_before"].append(float(sum(gk.line_length(p) for p in pieces)))
             out["len_after"].append(float(sum(gk.line_length(m) for m in merged)))
-        yield pd.DataFrame(out)
+        return out
 
-    shuffled, stream = _grouped_by_tile(feats, partitions, ["key", "zone_id"],
-                                        reduce_tiles)
-    return shuffled.mapInPandas(stream, MERGED_SCHEMA)
+    return pt.group_by_tile(feats, partitions, ["key", "zone_id"],
+                            reduce_tiles, MERGED_SCHEMA)
 
 
 def merge_points_by_attrs(df: DataFrame, attr_cols: list[str],
@@ -151,7 +151,8 @@ def merge_tile_polygons(feats: DataFrame, min_dist_px: float = 0.0,
     full_tile = [np.array([[lo, lo], [hi, lo], [hi, hi], [lo, hi], [lo, lo]],
                           dtype=float)]
 
-    def reduce_tiles(pdf: pd.DataFrame):
+    def reduce_tiles(tbl):
+        pdf = tbl.to_pandas()
         out = {k: [] for k in ("tile_id", "zoom", "kind", "n_input",
                                "n_rings", "area_in_px2", "area_out_px2")}
         for (tid, kind), grp in pdf.groupby(["tile_id", "kind"], sort=True):
@@ -182,11 +183,10 @@ def merge_tile_polygons(feats: DataFrame, min_dist_px: float = 0.0,
             out["n_rings"].append(len(merged))
             out["area_in_px2"].append(float(area_in))
             out["area_out_px2"].append(area_out)
-        yield pd.DataFrame(out)
+        return out
 
-    shuffled, stream = _grouped_by_tile(feats, partitions, ["key", "zone_id"],
-                                        reduce_tiles)
-    return shuffled.mapInPandas(stream, MERGED_POLY_SCHEMA)
+    return pt.group_by_tile(feats, partitions, ["key", "zone_id"],
+                            reduce_tiles, MERGED_POLY_SCHEMA)
 
 
 def merge_multipolygon(polys: list[list[np.ndarray]], extent: int = 4096

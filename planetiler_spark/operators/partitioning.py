@@ -25,6 +25,10 @@ n_buckets (default 8x partitions) exists precisely so AQE-style balance
 concerns can be tuned without touching the sort contract. The degenerate
 low-zoom tiles (one id = one bucket floor) are exactly as skewed as they
 are under hash partitioning — a single tile can never split.
+
+`group_by_tile` is the tile reduce built on this exchange: the point (row
+and packed), zones, raster and feature-merge reducers all stream their
+consecutive same-tile runs through it.
 """
 
 from __future__ import annotations
@@ -115,6 +119,16 @@ def token_col(p: int) -> str:
     return f"tok_p{p}"
 
 
+def range_tokens(spark, min_zoom: int, max_zoom: int, p: int,
+                 buckets_per_partition: int = 8
+                 ) -> tuple[np.ndarray, np.ndarray, str]:
+    """(boundaries, token of each bucket, token column name) for a render
+    over zooms min_zoom..max_zoom feeding a p-partition tile exchange."""
+    boundaries, pid = tile_range_partitioning(min_zoom, max_zoom, p,
+                                              buckets_per_partition)
+    return boundaries, partition_tokens(spark, p)[pid], token_col(p)
+
+
 def resolve_token_col(columns, p: int) -> str | None:
     """Return the token column matching partition count p, None if the frame
     carries no token column, and raise if it carries one built for a
@@ -130,3 +144,81 @@ def resolve_token_col(columns, p: int) -> str | None:
             f"partition count than {p}; pass matching `partitions` to both "
             "the render and the reduce")
     return want
+
+
+def run_bounds(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of the consecutive equal-key runs of a non-empty
+    array."""
+    starts = np.nonzero(np.diff(keys, prepend=keys[0] - 1))[0]
+    return starts, np.append(starts[1:], len(keys))
+
+
+def consecutive_runs(batches, run_col: str = "tile_id"):
+    """Arrow record batches sorted by `run_col` -> pyarrow Tables that each
+    hold only COMPLETE consecutive runs of it — FeatureGroup.groupIntoTiles
+    :339-378. A batch's trailing run may continue into the next batch, so it
+    is held back as zero-copy RecordBatch.slice chunks and concatenated once
+    when a later key shows up: a dense city tile spanning hundreds of
+    batches costs linear copies, never quadratic. Raises ValueError on
+    unsorted input, which would otherwise silently mis-group."""
+    import pyarrow as pa
+
+    held: list = []
+    last = None
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        keys = rb.column(run_col).to_numpy()
+        if (last is not None and keys[0] < last) or np.any(keys[1:] < keys[:-1]):
+            raise ValueError(f"batch not sorted by {run_col} "
+                             "(upstream sortWithinPartitions missing?)")
+        cut = int(np.searchsorted(keys, keys[-1], side="left"))
+        if cut:
+            yield pa.Table.from_batches(held + [rb.slice(0, cut)])
+            held = []
+        elif held and keys[0] != last:
+            yield pa.Table.from_batches(held)
+            held = []
+        held.append(rb.slice(cut))
+        last = keys[-1]
+    if held:
+        yield pa.Table.from_batches(held)
+
+
+def group_by_tile(df, partitions: int | None, order_cols: list[str],
+                  reduce_fn, schema: str, run_col: str = "tile_id"):
+    """The phase-3 tile reduce, Spark-first: one exchange that colocates
+    each run of `run_col`, a sort within partitions (the shuffle + sort IS
+    ExternalMergeSort.java:168), then `reduce_fn` over the complete runs of
+    each Arrow batch (consecutive_runs) inside mapInArrow — orders of
+    magnitude less per-group overhead than groupBy().applyInPandas at
+    millions of small tiles.
+
+    The exchange rides the frame's range-exchange token column when it has
+    one, which makes the output TOTAL zoom-major order with no sampling
+    pass; without one it hash-partitions on tile_id. `reduce_fn(table)`
+    returns a dict of output columns (anything pa.array accepts) keyed by
+    the names of DDL `schema`, or None for no rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    p = int(partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    key = resolve_token_col(df.columns, p)
+    if key is None:
+        if run_col != "tile_id":
+            raise ValueError(f"grouping by {run_col!r} needs a range-exchange "
+                             "token column")
+        key = "tile_id"
+    shuffled = df.repartition(p, key).sortWithinPartitions(run_col, *order_cols)
+    out_schema = to_arrow_schema(DataType.fromDDL(schema))
+
+    def reduce_batches(batches):
+        for tbl in consecutive_runs(batches, run_col):
+            cols = reduce_fn(tbl)
+            if cols is not None:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(cols[f.name], type=f.type) for f in out_schema],
+                    schema=out_schema)
+
+    return shuffled.mapInArrow(reduce_batches, schema)

@@ -257,7 +257,7 @@ def render_points_pdf(pdf: pd.DataFrame, wx: np.ndarray, wy: np.ndarray,
                       sort_key: np.ndarray | None = None) -> pd.DataFrame:
     """Explode a batch of point rows across zooms into the sorted-KV model:
     one output row per (feature, zoom, tile) with the 64-bit feature key
-    (FeatureGroup.encodeKey:176-180) ready for repartitionByRange."""
+    (FeatureGroup.encodeKey:176-180) ready for the tile exchange's sort."""
     if sort_key is None:
         sort_key = np.zeros(len(pdf), dtype=np.int64)
     outs = []

@@ -6,8 +6,10 @@ re-expressed Spark-first (ARCHITECTURE.md:5-11 of the reference).
                     TiledGeometry.slicePoint:245-260), emit rows keyed by the
                     64-bit feature key (FeatureGroup.encodeKey:176-196)
   phase 2 SORT    — the shuffle IS the external merge sort
-                    (ExternalMergeSort.java:168 -> repartitionByRange(key))
-  phase 3 EMIT    — groupBy(tile_id).applyInPandas: label-grid limit, MVT
+                    (ExternalMergeSort.java:168 -> an exact range exchange on
+                    analytic partition tokens + sortWithinPartitions)
+  phase 3 EMIT    — consecutive same-tile runs streamed through mapInArrow
+                    (partitioning.group_by_tile): label-grid limit, MVT
                     encode + gzip (VectorTile.java, TileArchiveWriter.java),
                     content-hash for order-free tile dedup
 
@@ -21,7 +23,7 @@ along. `verify_patches` checks both distributed.
 
 Skew (north_rule): dense city tiles are thinned by a SALTED two-stage
 label-grid top-K (`label_grid_thin`) before the tile reduce, so no single
-pandas group explodes; shuffle partitions are explicit everywhere.
+tile run explodes; shuffle partitions are explicit everywhere.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from ..kernels import image as ik
 from ..kernels import mvt
 from ..kernels import tile_math as tm
 from ..sources import images as src
+from . import partitioning as pt
 from . import render as R
 
 MAX_ZOOM = 14
@@ -82,6 +85,26 @@ def _partial_thin(out: pd.DataFrame, thin_limit: int, cell: int) -> pd.DataFrame
     return out[keep]
 
 
+def _render_batch(pdf: pd.DataFrame, zooms, thin_limit: int | None,
+                  cell: int, counters) -> pd.DataFrame:
+    """One images batch -> its per-(feature, zoom, tile) rows, with the
+    map-side partial label-grid cap (see _partial_thin). The render body of
+    both transports."""
+    ph = pdf["phash"].to_numpy()
+    wx, wy = src.anchor_world(ph)
+    sort_key = (ph % 1000).astype(np.int64)  # deterministic draw order
+    out = R.render_points_pdf(pdf, wx, wy, zooms, layer=0, sort_key=sort_key)
+    idx = out.pop("feature_id").to_numpy()
+    out["image_id"] = pdf["image_id"].to_numpy()[idx]
+    out["caption"] = pdf["caption"].to_numpy()[idx]
+    out["sort_key"] = sort_key[idx]
+    if thin_limit is not None:
+        out = _partial_thin(out, thin_limit, cell)
+    if counters is not None:  # one accumulator add per Arrow batch
+        counters.add("features", len(out))
+    return out
+
+
 def render_features(images: DataFrame, min_zoom: int = 0,
                     max_zoom: int = MAX_ZOOM, thin_limit: int | None = None,
                     grid_px: int = 32, counters=None,
@@ -94,48 +117,28 @@ def render_features(images: DataFrame, min_zoom: int = 0,
     archive-order sort — the same trick the packed path and the zones path
     use, eliminating the output repartitionByRange whose boundary sampling
     re-executes this whole stage (measured 5.5s vs 3.8s at sf0.1)."""
-    from . import partitioning as pt
-
     zooms = range(min_zoom, max_zoom + 1)
     cell = grid_px * 4096 // 256
     schema = FEATURES_SCHEMA
-    boundaries = bucket_tok = tok_name = None
+    tok_name = None
     if partitions is not None:
-        rp = int(partitions)
-        boundaries, pid = pt.tile_range_partitioning(min_zoom, max_zoom, rp)
-        bucket_tok = pt.partition_tokens(images.sparkSession, rp)[pid]
-        tok_name = pt.token_col(rp)
+        boundaries, bucket_tok, tok_name = pt.range_tokens(
+            images.sparkSession, min_zoom, max_zoom, int(partitions))
         schema = f"{FEATURES_SCHEMA}, {tok_name} long"
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ph = pdf["phash"].to_numpy()
-            wx, wy = src.anchor_world(ph)
-            sort_key = (ph % 1000).astype(np.int64)  # deterministic draw order
-            out = R.render_points_pdf(pdf, wx, wy, zooms, layer=0, sort_key=sort_key)
-            idx = out.pop("feature_id").to_numpy()
-            out["image_id"] = pdf["image_id"].to_numpy()[idx]
-            out["caption"] = pdf["caption"].to_numpy()[idx]
-            out["sort_key"] = sort_key[idx]
-            if thin_limit is not None:
-                out = _partial_thin(out, thin_limit, cell)
+            out = _render_batch(pdf, zooms, thin_limit, cell, counters)
             if tok_name is not None:
                 bk = np.searchsorted(boundaries, out["tile_id"].to_numpy(),
                                      side="right") - 1
                 out[tok_name] = bucket_tok[bk]
-            if counters is not None:  # one accumulator add per Arrow batch
-                counters.add("features", len(out))
             yield out
 
     cols = [c for c in images.columns if c != "bytes"]  # column pruning: no pixels in the vector path
     return images.select(*cols).mapInPandas(gen, schema)
-
-
-def _packed_schema(p: int) -> str:
-    from . import partitioning as pt
-    return f"bucket int, {pt.token_col(p)} long, blob binary"
 
 
 def _string_buffers(arr):
@@ -186,8 +189,7 @@ def _pack_feature_runs(out: pd.DataFrame, boundaries: np.ndarray,
     caps = pa.array(out["caption"].to_numpy(), type=pa.string()).take(take)
     id_off, id_data = _string_buffers(ids)
     cap_off, cap_data = _string_buffers(caps)
-    starts = np.nonzero(np.diff(b_s, prepend=b_s[0] - 1))[0]
-    ends = np.append(starts[1:], n)
+    starts, ends = pt.run_bounds(b_s)
     blobs = []
     for s, e in zip(starts, ends):
         blobs.append(b"".join((
@@ -241,14 +243,10 @@ def render_features_packed(images: DataFrame, min_zoom: int = 0,
     as one row per analytic tile-id-range bucket (see partitioning.py).
     `partitions` MUST match the value passed to encode_vector_tiles_packed
     (the partition tokens are baked per p)."""
-    from . import partitioning as pt
-
     spark = images.sparkSession
     p = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    boundaries, pid = pt.tile_range_partitioning(
-        min_zoom, max_zoom, p, buckets_per_partition)
-    bucket_tok = pt.partition_tokens(spark, p)[pid]
-    tok_name = pt.token_col(p)
+    boundaries, bucket_tok, tok_name = pt.range_tokens(
+        spark, min_zoom, max_zoom, p, buckets_per_partition)
     zooms = range(min_zoom, max_zoom + 1)
     cell = grid_px * 4096 // 256
 
@@ -256,22 +254,12 @@ def render_features_packed(images: DataFrame, min_zoom: int = 0,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ph = pdf["phash"].to_numpy()
-            wx, wy = src.anchor_world(ph)
-            sort_key = (ph % 1000).astype(np.int64)
-            out = R.render_points_pdf(pdf, wx, wy, zooms, layer=0, sort_key=sort_key)
-            idx = out.pop("feature_id").to_numpy()
-            out["image_id"] = pdf["image_id"].to_numpy()[idx]
-            out["caption"] = pdf["caption"].to_numpy()[idx]
-            out["sort_key"] = sort_key[idx]
-            if thin_limit is not None:
-                out = _partial_thin(out, thin_limit, cell)
-            if counters is not None:
-                counters.add("features", len(out))
+            out = _render_batch(pdf, zooms, thin_limit, cell, counters)
             yield _pack_feature_runs(out, boundaries, bucket_tok, tok_name)
 
     cols = [c for c in images.columns if c != "bytes"]
-    return images.select(*cols).mapInPandas(gen, _packed_schema(p))
+    return images.select(*cols).mapInPandas(
+        gen, f"bucket int, {tok_name} long, blob binary")
 
 
 def encode_vector_tiles_packed(packed: DataFrame, partitions: int | None = None,
@@ -282,80 +270,27 @@ def encode_vector_tiles_packed(packed: DataFrame, partitions: int | None = None,
     partitioning.partition_tokens), so the output is in TOTAL zoom-major
     tile order — partitions ascend with tile-id range, buckets ascend within
     a partition, tiles ascend within a bucket — and the sampling double-
-    compute of repartitionByRange never happens. Per bucket the features are
-    re-sorted (tile_id, sort_key, image_id) — the same total order the row
-    path's sortWithinPartitions("tile_id", "key", "image_id") produces (key
-    is monotone in (tile, layer=0, sort_key)) — then encoded by the shared
-    _encode_tile_runs, so tiles are byte-identical to the row path."""
+    compute of repartitionByRange never happens. A tile lives in exactly one
+    bucket, so runs of complete buckets hold complete tiles: their features
+    are re-sorted (tile_id, sort_key, image_id) — the same total order the
+    row path's sortWithinPartitions("tile_id", "key", "image_id") produces
+    (key is monotone in (tile, layer=0, sort_key)) — then encoded by the
+    shared _encode_tile_runs, so tiles are byte-identical to the row path."""
     import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from . import partitioning as pt
 
     cell = grid_px * mvt.EXTENT // 256
-    p = int(partitions or packed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    tok_name = pt.resolve_token_col(packed.columns, p)
-    if tok_name is None:
-        raise ValueError("encode_vector_tiles_packed needs bucket-packed "
-                         "input from render_features_packed")
-    shuffled = packed.repartition(p, tok_name).sortWithinPartitions("bucket")
+    cols = ("tile_id", "ex", "ey", "sort_key", "image_id", "caption")
 
-    def reduce_bucket(blob_views):
-        parts = [_unpack_blob(mv) for mv in blob_views]
-        if len(parts) == 1:
-            tid, ex, ey, sk, ids, caps = parts[0]
-        else:
-            tid = np.concatenate([x[0] for x in parts])
-            ex = np.concatenate([x[1] for x in parts])
-            ey = np.concatenate([x[2] for x in parts])
-            sk = np.concatenate([x[3] for x in parts])
-            ids = pa.concat_arrays([x[4] for x in parts])
-            caps = pa.concat_arrays([x[5] for x in parts])
-        order = pc.sort_indices(
-            pa.table({"t": tid, "s": sk, "i": ids}),
-            sort_keys=[("t", "ascending"), ("s", "ascending"),
-                       ("i", "ascending")])
-        idx = order.to_numpy()
-        return _encode_tile_runs(
-            tid[idx].astype(np.int64), ex[idx].astype(np.int64),
-            ey[idx].astype(np.int64), sk[idx].astype(np.int64),
-            ids.take(order), caps.take(order), thin_limit, cell, counters)
+    def reduce_buckets(tbl):
+        feats = pa.concat_tables(pa.table(dict(zip(cols, _unpack_blob(b))))
+                                 for b in tbl.column("blob").to_pylist())
+        feats = feats.sort_by([("tile_id", "ascending"),
+                               ("sort_key", "ascending"),
+                               ("image_id", "ascending")])
+        return _encode_tile_runs(feats, thin_limit, cell, counters)
 
-    def stream(batches):
-        held: list = []          # memoryviews of the open bucket's blobs
-        held_bucket: int | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            bks = rb.column(0).to_numpy()
-            if len(bks) > 1 and not np.all(bks[1:] >= bks[:-1]):
-                raise ValueError("encode_vector_tiles_packed: batch not "
-                                 "sorted by bucket")
-            col = rb.column(2)
-            if col.offset:
-                col = pa.concat_arrays([col])
-            off = np.frombuffer(col.buffers()[1], dtype=np.int32,
-                                count=len(col) + 1)
-            data = memoryview(col.buffers()[2])
-            starts = np.nonzero(np.diff(bks, prepend=bks[0] - 1))[0]
-            ends = np.append(starts[1:], len(bks))
-            for s, e in zip(starts, ends):
-                views = [data[off[i]:off[i + 1]] for i in range(s, e)]
-                if held and held_bucket == bks[s]:
-                    held.extend(views)
-                    continue
-                if held:
-                    out = reduce_bucket(held)
-                    if out is not None:
-                        yield out
-                held = views
-                held_bucket = int(bks[s])
-        if held:
-            out = reduce_bucket(held)
-            if out is not None:
-                yield out
-
-    return shuffled.mapInArrow(stream, TILE_SCHEMA)
+    return pt.group_by_tile(packed, partitions, [], reduce_buckets,
+                            TILE_SCHEMA, run_col="bucket")
 
 
 def render_patches(images: DataFrame, zoom: int = MAX_ZOOM) -> DataFrame:
@@ -437,70 +372,6 @@ def label_grid_thin(feats: DataFrame, limit: int = 64, grid_px: int = 32,
 # phase 3: tile reduce
 # ---------------------------------------------------------------------------
 
-def _grouped_by_tile(df: DataFrame, partitions: int | None, order_cols: list[str],
-                     reduce_fn):
-    """The reference's phase-3 shape, Spark-first: hash-repartition by tile so
-    each tile's rows land in one partition, sort within partitions by tile
-    (the shuffle+sort IS ExternalMergeSort.java:168), then stream Arrow
-    batches grouping CONSECUTIVE same-tile runs — exactly
-    FeatureGroup.groupIntoTiles:339-378 — with carry-over across batch
-    boundaries. Orders of magnitude less per-group overhead than
-    groupBy().applyInPandas at millions of small tiles."""
-    p = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    # a `tok` column (hash-preimage partition token over analytic tile-id
-    # range buckets, operators/partitioning.py) turns this hash exchange
-    # into an exact RANGE exchange: output is then in total tile order, so
-    # no repartitionByRange (whose boundary sampling re-executes the whole
-    # upstream plan) is ever needed downstream
-    from . import partitioning as pt
-
-    key = pt.resolve_token_col(df.columns, int(p)) or "tile_id"
-    shuffled = (df.repartition(int(p), key)
-                .sortWithinPartitions("tile_id", *order_cols))
-
-    def stream(batches):
-        # Carry-over across Arrow batch boundaries is O(total): the trailing
-        # (possibly continuing) tile is held as a LIST of chunks and concat'd
-        # exactly once when it completes — a dense city tile spanning hundreds
-        # of batches costs linear copies, never quadratic.
-        held: list[pd.DataFrame] = []
-        held_tile: int | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            tids = pdf["tile_id"].to_numpy()
-            # guard the sortedness precondition: searchsorted on an unsorted
-            # tids array would silently mis-group instead of erroring
-            if len(tids) > 1 and not np.all(tids[1:] >= tids[:-1]):
-                raise ValueError("_grouped_by_tile: batch not sorted by tile_id "
-                                 "(upstream sortWithinPartitions missing?)")
-            if held and held_tile != tids[0]:
-                yield from reduce_fn(pd.concat(held, ignore_index=True)
-                                     if len(held) > 1 else held[0])
-                held = []
-            last_start = int(np.searchsorted(tids, tids[-1], side="left"))
-            if held and last_start == 0:
-                held.append(pdf)  # whole batch continues the held tile
-                continue
-            if held:
-                first_end = int(np.searchsorted(tids, tids[0], side="right"))
-                held.append(pdf.iloc[:first_end])
-                yield from reduce_fn(pd.concat(held, ignore_index=True))
-                held = []
-                body = pdf.iloc[first_end:last_start]
-            else:
-                body = pdf.iloc[:last_start]
-            if len(body):
-                yield from reduce_fn(body)
-            held = [pdf.iloc[last_start:]]
-            held_tile = int(tids[-1])
-        if held:
-            yield from reduce_fn(pd.concat(held, ignore_index=True)
-                                 if len(held) > 1 else held[0])
-
-    return shuffled, stream
-
-
 def _cumcount(keys: np.ndarray) -> np.ndarray:
     """Order-preserving rank within each key group (pandas
     groupby.cumcount, pure numpy)."""
@@ -514,44 +385,45 @@ def _cumcount(keys: np.ndarray) -> np.ndarray:
     return rank
 
 
-def _encode_tile_runs(tids, ex, ey, sk, ids, caps, thin_limit, cell, counters):
+def _tile_columns(tids: np.ndarray, starts: np.ndarray, ends: np.ndarray,
+                  blobs: list[bytes]) -> dict:
+    """TILE_SCHEMA columns for the tile runs [starts, ends) of sorted tile
+    ids and their encoded blobs."""
+    import hashlib
+    xs, ys, zs = tm.tile_decode(tids[starts])
+    return {"tile_id": tids[starts], "zoom": zs, "x": xs, "y": ys,
+            "n_features": ends - starts, "tile_bytes": blobs,
+            "content_hash": [hashlib.sha256(b).hexdigest()[:16] for b in blobs]}
+
+
+def _encode_tile_runs(tbl, thin_limit, cell, counters):
     """Shared encode tail of both vector-tile reduce paths: label-grid cap
     (in sortKey order — FeatureGroup.TileFeatures.add:616-637), consecutive
-    tile runs, PointTileStream encode. Inputs MUST already be sorted by
-    (tile_id, sort_key, image_id); returns a RecordBatch or None."""
-    import hashlib
+    tile runs, PointTileStream encode. The point-feature table MUST already
+    be sorted by (tile_id, sort_key, image_id); returns TILE_SCHEMA columns
+    or None."""
     import pyarrow as pa
+    tids = tbl.column("tile_id").to_numpy()
+    ex, ey, sk = (tbl.column(c).to_numpy().astype(np.int64)
+                  for c in ("ex", "ey", "sort_key"))
+    ids, caps = tbl.column("image_id"), tbl.column("caption")
     if thin_limit is not None:
         # vectorized label-grid cap: rows are already in (tile, sortKey)
         # order, so rank-within-(tile,cell) = order of appearance
-        cell_key = (tids << 16) ^ (((ex // cell) & 0xFF) << 8) ^ ((ey // cell) & 0xFF)
-        keep = _cumcount(cell_key) < thin_limit
+        keep = _cumcount(_cell_key(tids, ex, ey, cell)) < thin_limit
         if not keep.all():
             idx = np.nonzero(keep)[0]
             tids, ex, ey, sk = tids[idx], ex[idx], ey[idx], sk[idx]
             ids = ids.take(pa.array(idx))
             caps = caps.take(pa.array(idx))
-    n = len(tids)
-    if n == 0:
+    if len(tids) == 0:
         return None
-    starts = np.nonzero(np.diff(tids, prepend=tids[0] - 1))[0]
-    ends = np.append(starts[1:], n)
-    xs, ys, zs = tm.tile_decode(tids[starts])
+    starts, ends = pt.run_bounds(tids)
     stream = mvt.PointTileStream(ex, ey, sk, ids, caps)
     blobs = list(stream.encode_tiles(starts, ends))
     if counters is not None:  # per reduce call, not per tile
         counters.add("tiles", len(starts))
-    return pa.RecordBatch.from_arrays([
-        pa.array(tids[starts], type=pa.int64()),
-        pa.array(zs.astype(np.int32), type=pa.int32()),
-        pa.array(xs.astype(np.int32), type=pa.int32()),
-        pa.array(ys.astype(np.int32), type=pa.int32()),
-        pa.array((ends - starts).astype(np.int64), type=pa.int64()),
-        pa.array(blobs, type=pa.binary()),
-        pa.array([hashlib.sha256(b).hexdigest()[:16] for b in blobs],
-                 type=pa.string()),
-    ], names=["tile_id", "zoom", "x", "y", "n_features",
-              "tile_bytes", "content_hash"])
+    return _tile_columns(tids, starts, ends, blobs)
 
 
 def encode_vector_tiles(feats: DataFrame, partitions: int | None = None,
@@ -559,114 +431,52 @@ def encode_vector_tiles(feats: DataFrame, partitions: int | None = None,
                         grid_px: int = 32, counters=None) -> DataFrame:
     """Sorted consecutive-tile grouping -> one MVT blob per tile.
 
-    ARROW-NATIVE reduce (mapInArrow): record batches stream straight from the
-    shuffle — tile ids/coords as zero-copy numpy views, image_id/caption stay
-    Arrow string arrays end-to-end (PointTileStream casts offsets once; no
-    arrow->pandas->object->arrow round-trip, which cost ~1.2us/row).
-    Carry-over across batch boundaries uses zero-copy RecordBatch.slice.
+    ARROW-NATIVE reduce (partitioning.group_by_tile): record batches stream
+    straight from the shuffle — tile ids/coords as zero-copy numpy views,
+    image_id/caption stay Arrow string arrays end-to-end (PointTileStream
+    casts offsets once; no arrow->pandas->object->arrow round-trip, which
+    cost ~1.2us/row). A frame carrying range-exchange tokens
+    (render_features(partitions=...)) comes out in TOTAL zoom-major order.
 
     thin_limit: label-grid density cap applied INSIDE the reduce (rows arrive
     sorted by key, i.e. sortKey order — FeatureGroup.TileFeatures.add:616-637
     drops beyond-limit features exactly like this, during tile assembly).
     Costs no extra shuffle; use the standalone `label_grid_thin` (salted
     windows) instead when data must shrink BEFORE the shuffle."""
-    import pyarrow as pa
-
-    from . import partitioning as pt
     cell = grid_px * mvt.EXTENT // 256
-    p = partitions or feats.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    # a tok column (render_features(partitions=...)) turns this hash exchange
-    # into an exact RANGE exchange: partitions ascend with tile-id range, so
-    # the per-partition sort below yields TOTAL zoom-major order for free
-    key = pt.resolve_token_col(feats.columns, int(p)) or "tile_id"
-    shuffled = (feats.repartition(int(p), key)
-                .sortWithinPartitions("tile_id", "key", "image_id"))
 
-    def reduce_tiles(chunks: list[pa.RecordBatch]):
-        tbl = pa.Table.from_batches(chunks)
-        return _encode_tile_runs(
-            tbl.column("tile_id").to_numpy(),
-            tbl.column("ex").to_numpy().astype(np.int64),
-            tbl.column("ey").to_numpy().astype(np.int64),
-            tbl.column("sort_key").to_numpy().astype(np.int64),
-            tbl.column("image_id"), tbl.column("caption"),
-            thin_limit, cell, counters)
+    def reduce_tiles(tbl):
+        return _encode_tile_runs(tbl, thin_limit, cell, counters)
 
-    def stream_batches(batches):
-        # consecutive-run grouping with zero-copy carry-over (the arrow twin
-        # of _grouped_by_tile's pandas stream; same O(total) chunk holding)
-        held: list[pa.RecordBatch] = []
-        held_tile: int | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tids = rb.column(rb.schema.get_field_index("tile_id")).to_numpy()
-            if len(tids) > 1 and not np.all(tids[1:] >= tids[:-1]):
-                raise ValueError("encode_vector_tiles: batch not sorted by "
-                                 "tile_id (upstream sortWithinPartitions missing?)")
-            if held and held_tile != tids[0]:
-                out = reduce_tiles(held)
-                if out is not None:
-                    yield out
-                held = []
-            last_start = int(np.searchsorted(tids, tids[-1], side="left"))
-            if held and last_start == 0:
-                held.append(rb)  # whole batch continues the held tile
-                continue
-            if held:
-                first_end = int(np.searchsorted(tids, tids[0], side="right"))
-                held.append(rb.slice(0, first_end))
-                out = reduce_tiles(held)
-                if out is not None:
-                    yield out
-                held = []
-                body = rb.slice(first_end, last_start - first_end)
-            else:
-                body = rb.slice(0, last_start)
-            if body.num_rows:
-                out = reduce_tiles([body])
-                if out is not None:
-                    yield out
-            held = [rb.slice(last_start)]
-            held_tile = int(tids[-1])
-        if held:
-            out = reduce_tiles(held)
-            if out is not None:
-                yield out
-
-    return shuffled.mapInArrow(stream_batches, TILE_SCHEMA)
+    return pt.group_by_tile(feats, partitions, ["key", "image_id"],
+                            reduce_tiles, TILE_SCHEMA)
 
 
 def encode_raster_tiles(patches: DataFrame, partitions: int | None = None) -> DataFrame:
     """Paste per-image patches into a 256x256 canvas per tile (deterministic
     z-order: image_id asc, later wins) and PNG-encode — the raster<->vector
-    graft operator (sorted consecutive-tile grouping, see _grouped_by_tile)."""
+    graft operator (sorted consecutive-tile grouping, see
+    partitioning.group_by_tile)."""
 
-    def reduce_tiles(pdf: pd.DataFrame):
-        tids = pdf["tile_id"].to_numpy()
-        starts = np.nonzero(np.diff(tids, prepend=tids[0] - 1))[0]
-        ends = np.append(starts[1:], len(tids))
+    def reduce_tiles(tbl):
+        tids = tbl.column("tile_id").to_numpy()
+        starts, ends = pt.run_bounds(tids)
         xs, ys, zs = tm.tile_decode(tids[starts])
-        out = {k: [] for k in ("tile_id", "zoom", "x", "y", "n_images", "raster")}
-        px0a, py0a = pdf["px0"].to_numpy(), pdf["py0"].to_numpy()
-        pwa, pha = pdf["pw"].to_numpy(), pdf["ph"].to_numpy()
-        patches_a = pdf["patch"].to_numpy()
-        for g, (s, e) in enumerate(zip(starts, ends)):
+        px0a, py0a, pwa, pha = (tbl.column(c).to_numpy()
+                                for c in ("px0", "py0", "pw", "ph"))
+        patches_a = tbl.column("patch").to_pylist()
+        rasters = []
+        for s, e in zip(starts, ends):
             canvas = np.zeros((256, 256, 3), dtype=np.uint8)
             for i in range(s, e):
-                patch = ik.decode_png(bytes(patches_a[i]))
+                patch = ik.decode_png(patches_a[i])
                 canvas[py0a[i]:py0a[i] + pha[i], px0a[i]:px0a[i] + pwa[i]] = patch
-            out["tile_id"].append(int(tids[s]))
-            out["zoom"].append(int(zs[g]))
-            out["x"].append(int(xs[g]))
-            out["y"].append(int(ys[g]))
-            out["n_images"].append(e - s)
-            out["raster"].append(ik.encode_png(canvas))  # final artifact: full compression
-        yield pd.DataFrame(out)
+            rasters.append(ik.encode_png(canvas))  # final artifact: full compression
+        return {"tile_id": tids[starts], "zoom": zs, "x": xs, "y": ys,
+                "n_images": ends - starts, "raster": rasters}
 
-    shuffled, stream = _grouped_by_tile(patches, partitions,
-                                        ["image_id"], reduce_tiles)
-    return shuffled.mapInPandas(stream, RASTER_SCHEMA)
+    return pt.group_by_tile(patches, partitions, ["image_id"], reduce_tiles,
+                            RASTER_SCHEMA)
 
 
 def verify_patches(patches: DataFrame, images: DataFrame | None = None) -> DataFrame:
@@ -854,7 +664,6 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
     rows across zooms, in the sorted-KV model. Each row carries its analytic
     range-exchange token (partitioning.py) so the tile shuffle doubles as the
     archive-order sort — no repartitionByRange sampling pass downstream."""
-    from . import partitioning as pt
     from ..kernels import geom as gk
     from ..sources import images as src
 
@@ -863,9 +672,8 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
         else src.zones_pdf(n_zones or src.N_ZONES))
     rp = int(range_partitions
              or spark.conf.get("spark.sql.shuffle.partitions"))
-    boundaries, pid = pt.tile_range_partitioning(min_zoom, max_zoom, rp)
-    bucket_tok = pt.partition_tokens(spark, rp)[pid]
-    tok_name = pt.token_col(rp)
+    boundaries, bucket_tok, tok_name = pt.range_tokens(spark, min_zoom,
+                                                       max_zoom, rp)
 
     def gen(batches):
         for pdf in batches:
@@ -908,31 +716,28 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
     (GeoUtils.java:315-399 -> kernels/geom.repair_polygon) on any fragment
     whose snapped rings properly self-intersect — the repair the reference
     applies per tile feature in writeTileFeatures (FeatureRenderer.java:252)."""
-    import hashlib
     from ..kernels import geom as gk
 
     fill_field = mvt._packed(4, mvt.encode_fill(R.BUFFER_PX))
     buf_px = R.BUFFER_PX * mvt.EXTENT / 256.0
 
-    def reduce_tiles(pdf: pd.DataFrame):
-        tids = pdf["tile_id"].to_numpy()
-        starts = np.nonzero(np.diff(tids, prepend=tids[0] - 1))[0]
-        ends = np.append(starts[1:], len(tids))
-        xs, ys, zs = tm.tile_decode(tids[starts])
-        fills = pdf["fill"].to_numpy()
-        parts_a = pdf["parts"].to_numpy()
-        zid_a = pdf["zone_id"].to_numpy()
-        kind_a = pdf["kind"].to_numpy()
+    def reduce_tiles(tbl):
+        tids = tbl.column("tile_id").to_numpy()
+        starts, ends = pt.run_bounds(tids)
+        fills = tbl.column("fill").to_numpy()
+        parts_a = tbl.column("parts").to_pylist()
+        zid_a = tbl.column("zone_id").to_pylist()
+        kind_a = tbl.column("kind").to_pylist()
         # batch-encode every non-fill geometry in one vectorized pass
         # (polygon_geom_stream; byte-identical to the per-feature path);
         # the self-intersect screen + raster repair stay per-feature but the
         # screen early-outs through the scalar small-fragment path
-        nf = len(pdf)
+        nf = len(tids)
         rings, ring_feat = [], []
         for i in range(nf):
             if fills[i]:
                 continue
-            parts = gk.unpack_parts(bytes(parts_a[i]))
+            parts = gk.unpack_parts(parts_a[i])
             if fix_polygons and gk.polygon_self_intersects(parts):
                 parts = [np.round(r).astype(np.int64)
                          for r in gk.repair_polygon(
@@ -941,9 +746,8 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
                 rings.append(r)
                 ring_feat.append(i)
         goff, gflat = mvt.polygon_geom_stream(rings, ring_feat, nf)
-        out = {k: [] for k in ("tile_id", "zoom", "x", "y", "n_features",
-                               "tile_bytes", "content_hash")}
-        for g, (s, e) in enumerate(zip(starts, ends)):
+        blobs = []
+        for s, e in zip(starts, ends):
             layer = mvt.LayerBuilder("zones")
             for i in range(s, e):
                 attrs = {"zone_id": zid_a[i], "kind": kind_a[i]}
@@ -953,19 +757,11 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
                 elif goff[i] < goff[i + 1]:
                     layer.add_feature_rawgeom(None, mvt.GEOM_POLYGON,
                                               gflat[goff[i]:goff[i + 1]], attrs)
-            blob = mvt.encode_tile([layer])
-            out["tile_id"].append(int(tids[s]))
-            out["zoom"].append(int(zs[g]))
-            out["x"].append(int(xs[g]))
-            out["y"].append(int(ys[g]))
-            out["n_features"].append(e - s)
-            out["tile_bytes"].append(blob)
-            out["content_hash"].append(hashlib.sha256(blob).hexdigest()[:16])
-        yield pd.DataFrame(out)
+            blobs.append(mvt.encode_tile([layer]))
+        return _tile_columns(tids, starts, ends, blobs)
 
-    shuffled, stream = _grouped_by_tile(feats, partitions,
-                                        ["key", "zone_id"], reduce_tiles)
-    return shuffled.mapInPandas(stream, TILE_SCHEMA)
+    return pt.group_by_tile(feats, partitions, ["key", "zone_id"],
+                            reduce_tiles, TILE_SCHEMA)
 
 
 def zones_tileset(spark: SparkSession, min_zoom: int = 0, max_zoom: int = 8,
@@ -1032,9 +828,9 @@ def tileset(spark: SparkSession, images: DataFrame, min_zoom: int = 0,
     (test_packed_transport_equals_row_path). Default: see _packed_default."""
     if packed is None:
         packed = _packed_default()
+    p = int(shuffle_partitions
+            or spark.conf.get("spark.sql.shuffle.partitions"))
     if packed and not pre_thin:
-        p = int(shuffle_partitions
-                or spark.conf.get("spark.sql.shuffle.partitions"))
         feats = render_features_packed(images, min_zoom, max_zoom,
                                        thin_limit=thin_limit,
                                        counters=counters, partitions=p)
@@ -1042,8 +838,6 @@ def tileset(spark: SparkSession, images: DataFrame, min_zoom: int = 0,
         return encode_vector_tiles_packed(feats, partitions=p,
                                           thin_limit=thin_limit,
                                           counters=counters)
-    p = int(shuffle_partitions
-            or spark.conf.get("spark.sql.shuffle.partitions"))
     # ordered row path rides the analytic range tokens through the one tile
     # shuffle (same as the packed/zones paths) — the old output
     # repartitionByRange's boundary sampling re-executed the entire render

@@ -1971,7 +1971,7 @@ def _images_tileset_oracle() -> str:
     (np.round is half-to-even — replayed with an exact CASE), the 512-unit
     label-grid cell key with the engine's `//`+`&0xFF` wrap for negative
     buffer coords, and the global rank cap of 64 per (tile, cell) ordered by
-    (sort_key, image_id) (_encode_tile_runs:503-512). The deterministic
+    (sort_key, image_id) (tile_pipeline._encode_tile_runs). The deterministic
     (id, wx, wy, sort_key) anchor table is inlined as VALUES at the gate's
     sf0.01 size (repr(float) round-trips float64 exactly, as the PIP oracle
     does for zone edges) and filtered by a row count derived from the orders
@@ -2056,12 +2056,12 @@ def _images_tileset_oracle() -> str:
 @query("images_tileset", _images_tileset_oracle)
 def images_tileset(spark, sf_dir):
     """THE flagship: Planetiler's map->sort->group-by-tile pipeline over the
-    synthesized images table (render/slice -> shuffle on the 64-bit key ->
-    applyInPandas MVT encode). Oracle-backed since round 4: the DuckDB side
-    replays slicing + buffer dup + banker's snap + the 64-per-label-grid-cell
-    rank cap exactly (see _images_tileset_oracle); tile BYTES stay pinned by
-    the byte-identity pytest suite, so content_hash is no longer in the gate
-    projection."""
+    synthesized images table (render/slice -> range exchange on the tile id
+    -> consecutive-run MVT encode in mapInArrow). Oracle-backed since round
+    4: the DuckDB side replays slicing + buffer dup + banker's snap + the
+    64-per-label-grid-cell rank cap exactly (see _images_tileset_oracle);
+    tile BYTES stay pinned by the byte-identity pytest suite, so
+    content_hash is no longer in the gate projection."""
     from ..operators import tile_pipeline as tp
     from ..sources import images as src
 
@@ -2170,10 +2170,11 @@ def _raster_patches_oracle() -> str:
 def raster_tile_patches(spark, sf_dir):
     """Raster graft AND its distributed verify job in one result set (merged
     with the former `patch_psnr_verify` row to free a gate slot): decode image
-    bytes -> crop per-z14-tile patches -> paste into 256x256 canvases via
-    groupBy(tile_id).applyInPandas, unioned with the BASELINE.json input_hint
-    invariant check — decoded patch pixels vs deterministic source (exact for
-    png, PSNR>=40dB lossy) and caption equality, aggregated per outcome.
+    bytes -> crop per-z14-tile patches -> paste into 256x256 canvases per
+    consecutive tile run (partitioning.group_by_tile), unioned with the
+    BASELINE.json input_hint invariant check — decoded patch pixels vs
+    deterministic source (exact for png, PSNR>=40dB lossy) and caption
+    equality, aggregated per outcome.
     `kind` discriminates: 'patch' rows carry the tile index (n = images in
     tile), 'verify' rows carry (pixels_ok, caption_ok, n = patches).
     Oracle-backed since round 4 (_raster_patches_oracle): the patch index is

@@ -3,7 +3,7 @@ mode). Pure-Python package, no build step:
 
     python tools/package.py
     spark-submit --py-files dist/planetiler_spark.zip \
-        planetiler_spark/plans/pipeline.py --n 10000000 --out s3://.../tiles
+        planetiler_spark/plans/pipeline.py --n 10000000 --out /tmp/tiles
 """
 
 from __future__ import annotations

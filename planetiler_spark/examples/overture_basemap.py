@@ -20,6 +20,8 @@ Run:  python -m planetiler_spark example-overture \
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 
@@ -30,6 +32,19 @@ LAYER = "building"
 MIN_ZOOM = 13
 MAX_ZOOM = 14
 ATTRS = ("height", "roof_color")
+
+
+def _feature_id(source_id, fallback: int) -> int:
+    """Source id -> int64 feature id. Integer ids pass through; string ids
+    (Overture's GERS ids are hex strings) map to the first 8 bytes of their
+    sha256, so one id always gets the same feature id; a missing id takes
+    `fallback`."""
+    if source_id is None or source_id != source_id:  # None or NaN
+        return int(fallback)
+    if isinstance(source_id, str):
+        digest = hashlib.sha256(source_id.encode("utf-8")).digest()
+        return int.from_bytes(digest[:8], "big", signed=True)
+    return int(source_id)
 
 
 def overture_features(spark: SparkSession, parquet_path: str,
@@ -52,7 +67,7 @@ def overture_features(spark: SparkSession, parquet_path: str,
         for pdf in batches:
             rows = {k: [] for k in ("fid", "layer", "kind", "min_zoom",
                                     "max_zoom", "attrs", "lons", "lats")}
-            for i, r in enumerate(pdf.itertuples(index=False)):
+            for r in pdf.itertuples(index=False):
                 typ, data = gk.parse_wkb(bytes(r.geometry))
                 if typ == "polygon":
                     rings = list(data)
@@ -68,7 +83,8 @@ def overture_features(spark: SparkSession, parquet_path: str,
                     if v is not None and not (isinstance(v, float)
                                               and np.isnan(v)):
                         attrs[c] = str(v)
-                rows["fid"].append(int(getattr(r, "id", i)))
+                rows["fid"].append(_feature_id(getattr(r, "id", None),
+                                               r.fallback_id))
                 rows["layer"].append(LAYER)
                 rows["kind"].append("multipolygon")
                 rows["min_zoom"].append(MIN_ZOOM)
@@ -81,7 +97,9 @@ def overture_features(spark: SparkSession, parquet_path: str,
             yield pd.DataFrame(rows)
 
     sel = ["geometry"] + keep + (["id"] if "id" in cols else [])
-    return df.select(*sel).mapInPandas(gen, out_schema)
+    # unique across the whole input, unlike a row index within one batch
+    fallback = F.monotonically_increasing_id().alias("fallback_id")
+    return df.select(*sel, fallback).mapInPandas(gen, out_schema)
 
 
 def build(spark: SparkSession, parquet_path: str, out_dir: str,

@@ -154,30 +154,14 @@ class LayerBuilder:
 
     def add_feature(self, fid: int | None, geom_type: int, commands: list[int],
                     attrs: dict | None = None):
-        tags: list[int] = []
-        for k, v in (attrs or {}).items():
-            if v is None:
-                continue
-            ki = self.keys.setdefault(k, len(self.keys))
-            vb = encode_value(v)
-            vi = self.values.setdefault(vb, len(self.values))
-            tags.append(ki)
-            tags.append(vi)
-        body = b""
-        if fid is not None:
-            body += _tag(1, 0) + _varint(int(fid))
-        if tags:
-            body += _packed(2, tags)
-        body += _tag(3, 0) + _varint(geom_type)
-        body += _packed(4, commands)
-        self.features.append(body)
+        self.add_feature_rawgeom(fid, geom_type, _packed(4, commands), attrs)
 
     def add_feature_rawgeom(self, fid: int | None, geom_type: int,
                             geom_field: bytes, attrs: dict | None = None):
         """add_feature for a PRE-ENCODED geometry field (tag 0x22 + length +
-        command varints), e.g. one slice of polygon_geom_stream's output.
-        Byte-identical to add_feature(fid, geom_type, commands, attrs) when
-        geom_field == _packed(4, commands)."""
+        command varints), e.g. one slice of polygon_geom_stream's output;
+        add_feature(fid, geom_type, commands, attrs) is this with
+        geom_field = _packed(4, commands)."""
         tags: list[int] = []
         for k, v in (attrs or {}).items():
             if v is None:
@@ -444,17 +428,8 @@ class PointTileStream:
 
         def seg_binary(parts):
             """[(B (n,w), L)] -> LargeBinaryArray of the per-row
-            concatenation, via ONE boolean-mask compaction."""
-            Bs = np.concatenate([B for B, _ in parts], axis=1)
-            mask = np.concatenate(
-                [np.arange(B.shape[1])[None, :] < L[:, None] for B, L in parts],
-                axis=1)
-            total = parts[0][1].copy()
-            for _, L in parts[1:]:
-                total += L
-            offs = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(total, out=offs[1:])
-            data = Bs[mask]
+            concatenation (_pack_rows)."""
+            offs, data = _pack_rows(parts, n)
             return pa.LargeBinaryArray.from_buffers(
                 pa.large_binary(), n,
                 [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(data.tobytes())])

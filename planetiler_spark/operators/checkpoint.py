@@ -106,7 +106,7 @@ def run_checkpointed(spark: SparkSession, images: DataFrame, out_dir: str,
             continue
         t0 = time.time()
         part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        tiles = tp.tileset(spark, part, min_zoom, max_zoom, ordered=True)
+        tiles = tp.tileset(spark, part, min_zoom, max_zoom)
         path = os.path.join(out_dir, "tiles", f"bucket={b}")
         tiles.write.mode("overwrite").parquet(path)
         agg = spark.read.parquet(path).agg(

@@ -27,7 +27,7 @@ low-zoom tiles (one id = one bucket floor) are exactly as skewed as they
 are under hash partitioning — a single tile can never split.
 
 `group_by_tile` is the tile reduce built on this exchange: the point (row
-and packed), zones, raster and feature-merge reducers all stream their
+and packed), zones, raster, feature-merge and OSM reducers all stream their
 consecutive same-tile runs through it.
 """
 

@@ -21,9 +21,11 @@ reduce pastes patches into a 256x256 canvas per tile. Per-row invariant
 are exact for png and PSNR>=40dB for the lossy codec; caption equality rides
 along. `verify_patches` checks both distributed.
 
-Skew (north_rule): dense city tiles are thinned by a SALTED two-stage
-label-grid top-K (`label_grid_thin`) before the tile reduce, so no single
-tile run explodes; shuffle partitions are explicit everywhere.
+Skew (north_rule): dense city tiles are capped by the label-grid top-K
+twice — a map-side partial cap in the render (`_partial_thin`) and the exact
+cap inside the tile reduce — so no single tile run explodes on either side
+of the shuffle; `label_grid_thin` is the salted two-stage window form of the
+same cap. Shuffle partitions are explicit everywhere.
 """
 
 from __future__ import annotations
@@ -49,6 +51,16 @@ TILE_SCHEMA = "tile_id long, zoom int, x int, y int, n_features long, tile_bytes
 RASTER_SCHEMA = "tile_id long, zoom int, x int, y int, n_images long, raster binary"
 VERIFY_SCHEMA = ("image_id string, tile_id long, psnr double, pixels_ok boolean, "
                  "caption_ok boolean")
+
+
+def tile_columns(tile_ids: np.ndarray, n_features, blobs: list[bytes]) -> dict:
+    """TILE_SCHEMA columns for encoded tiles: the decoded tile coordinates
+    and a content hash for order-free dedup."""
+    import hashlib
+    xs, ys, zs = tm.tile_decode(tile_ids)
+    return {"tile_id": tile_ids, "zoom": zs, "x": xs, "y": ys,
+            "n_features": n_features, "tile_bytes": blobs,
+            "content_hash": [hashlib.sha256(b).hexdigest()[:16] for b in blobs]}
 
 
 # ---------------------------------------------------------------------------
@@ -115,7 +127,7 @@ def render_features(images: DataFrame, min_zoom: int = 0,
     With `partitions` set, each row also carries its analytic range-exchange
     token (partitioning.py) so the ROW-path tile shuffle doubles as the
     archive-order sort — the same trick the packed path and the zones path
-    use, eliminating the output repartitionByRange whose boundary sampling
+    use, eliminating an output sampled range sort whose boundary sampling
     re-executes this whole stage (measured 5.5s vs 3.8s at sf0.1)."""
     zooms = range(min_zoom, max_zoom + 1)
     cell = grid_px * 4096 // 256
@@ -269,8 +281,8 @@ def encode_vector_tiles_packed(packed: DataFrame, partitions: int | None = None,
     shuffle on the partition TOKEN (exact bucket->partition placement, see
     partitioning.partition_tokens), so the output is in TOTAL zoom-major
     tile order — partitions ascend with tile-id range, buckets ascend within
-    a partition, tiles ascend within a bucket — and the sampling double-
-    compute of repartitionByRange never happens. A tile lives in exactly one
+    a partition, tiles ascend within a bucket — and the double compute of a
+    sampled range sort never happens. A tile lives in exactly one
     bucket, so runs of complete buckets hold complete tiles: their features
     are re-sorted (tile_id, sort_key, image_id) — the same total order the
     row path's sortWithinPartitions("tile_id", "key", "image_id") produces
@@ -385,17 +397,6 @@ def _cumcount(keys: np.ndarray) -> np.ndarray:
     return rank
 
 
-def _tile_columns(tids: np.ndarray, starts: np.ndarray, ends: np.ndarray,
-                  blobs: list[bytes]) -> dict:
-    """TILE_SCHEMA columns for the tile runs [starts, ends) of sorted tile
-    ids and their encoded blobs."""
-    import hashlib
-    xs, ys, zs = tm.tile_decode(tids[starts])
-    return {"tile_id": tids[starts], "zoom": zs, "x": xs, "y": ys,
-            "n_features": ends - starts, "tile_bytes": blobs,
-            "content_hash": [hashlib.sha256(b).hexdigest()[:16] for b in blobs]}
-
-
 def _encode_tile_runs(tbl, thin_limit, cell, counters):
     """Shared encode tail of both vector-tile reduce paths: label-grid cap
     (in sortKey order — FeatureGroup.TileFeatures.add:616-637), consecutive
@@ -423,7 +424,7 @@ def _encode_tile_runs(tbl, thin_limit, cell, counters):
     blobs = list(stream.encode_tiles(starts, ends))
     if counters is not None:  # per reduce call, not per tile
         counters.add("tiles", len(starts))
-    return _tile_columns(tids, starts, ends, blobs)
+    return tile_columns(tids[starts], ends - starts, blobs)
 
 
 def encode_vector_tiles(feats: DataFrame, partitions: int | None = None,
@@ -663,7 +664,7 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
     """zones polygons -> per-tile clipped/simplified fragments + interior fill
     rows across zooms, in the sorted-KV model. Each row carries its analytic
     range-exchange token (partitioning.py) so the tile shuffle doubles as the
-    archive-order sort — no repartitionByRange sampling pass downstream."""
+    archive-order sort — no sampled range sort downstream."""
     from ..kernels import geom as gk
     from ..sources import images as src
 
@@ -758,7 +759,7 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
                     layer.add_feature_rawgeom(None, mvt.GEOM_POLYGON,
                                               gflat[goff[i]:goff[i + 1]], attrs)
             blobs.append(mvt.encode_tile([layer]))
-        return _tile_columns(tids, starts, ends, blobs)
+        return tile_columns(tids[starts], ends - starts, blobs)
 
     return pt.group_by_tile(feats, partitions, ["key", "zone_id"],
                             reduce_tiles, TILE_SCHEMA)
@@ -781,7 +782,7 @@ def zones_tileset(spark: SparkSession, min_zoom: int = 0, max_zoom: int = 8,
                              range_partitions=p, zones_pdf=zones_pdf),
         partitions=p)
     # already in total zoom-major order: the tile shuffle rode the analytic
-    # range tokens, so the old repartitionByRange (whose boundary sampling
+    # range tokens, so the old sampled range sort (whose boundary sampling
     # re-executed this whole pipeline) is gone
     return tiles
 
@@ -807,52 +808,38 @@ def _packed_default() -> bool:
 
 def tileset(spark: SparkSession, images: DataFrame, min_zoom: int = 0,
             max_zoom: int = MAX_ZOOM, shuffle_partitions: int | None = None,
-            thin_limit: int | None = 64, ordered: bool = True,
-            pre_thin: bool = False, counters=None,
+            thin_limit: int | None = 64, counters=None,
             packed: bool | None = None) -> DataFrame:
     """images -> vector tiles table, zoom-major tile order (phase 1+2+3).
 
-    Density thinning (thin_limit) normally runs inside the tile reduce (zero
-    extra shuffles). pre_thin=True additionally runs the salted two-stage
-    window BEFORE the shuffle — worth it only when dense tiles dominate
-    shuffle volume (extreme skew at production scale); it needs row-shaped
-    features, so it forces the row path.
+    Density thinning (thin_limit) runs as a map-side partial cap in the
+    render plus the exact cap inside the tile reduce (zero extra shuffles);
+    the standalone `label_grid_thin` (salted windows) is the operator for
+    data that must shrink before a shuffle.
 
-    packed=True moves features across the shuffle as bucket-packed binary
-    rows on an analytic range partitioning (partitioning.py): ~50x fewer
-    rows through Spark's per-row UnsafeRow<->Arrow conversion AND the output
-    lands in total zoom-major order for free, replacing the
-    repartitionByRange(tile_id) whose boundary sampling re-executed the
-    entire pipeline (measured: 5.5s -> 3.8s at sf0.1 before packing even
-    starts helping). Tiles are byte-identical between both paths
+    Both transports ride the analytic range tokens (partitioning.py), so the
+    one tile shuffle doubles as the archive-order sort and the output lands
+    in total zoom-major order with no sampled range sort, whose boundary
+    sampling re-executed the entire pipeline (measured: 5.5s -> 3.8s at
+    sf0.1). packed=True moves features across the shuffle as bucket-packed
+    binary rows: ~50x fewer rows through Spark's per-row UnsafeRow<->Arrow
+    conversion. Tiles are byte-identical between both paths
     (test_packed_transport_equals_row_path). Default: see _packed_default."""
     if packed is None:
         packed = _packed_default()
     p = int(shuffle_partitions
             or spark.conf.get("spark.sql.shuffle.partitions"))
-    if packed and not pre_thin:
+    if packed:
         feats = render_features_packed(images, min_zoom, max_zoom,
                                        thin_limit=thin_limit,
                                        counters=counters, partitions=p)
-        # already in total zoom-major order (exact range exchange)
         return encode_vector_tiles_packed(feats, partitions=p,
                                           thin_limit=thin_limit,
                                           counters=counters)
-    # ordered row path rides the analytic range tokens through the one tile
-    # shuffle (same as the packed/zones paths) — the old output
-    # repartitionByRange's boundary sampling re-executed the entire render
-    use_tok = ordered and not pre_thin
     feats = render_features(images, min_zoom, max_zoom, thin_limit=thin_limit,
-                            counters=counters,
-                            partitions=p if use_tok else None)
-    if pre_thin and thin_limit is not None:
-        feats = label_grid_thin(feats, limit=thin_limit)
-    tiles = encode_vector_tiles(feats, partitions=p,
-                                thin_limit=thin_limit, counters=counters)
-    if ordered and not use_tok:
-        # pre_thin fallback: zoom-major order via a (tiny) output range sort
-        tiles = tiles.repartitionByRange(16, "tile_id").sortWithinPartitions("tile_id")
-    return tiles
+                            counters=counters, partitions=p)
+    return encode_vector_tiles(feats, partitions=p, thin_limit=thin_limit,
+                               counters=counters)
 
 
 def raster_tileset(spark: SparkSession, images: DataFrame,

@@ -8,9 +8,10 @@ sort -> mbtiles) replayed Spark-first over this engine's own pieces:
     -> profile match (layer rules on tags)       Catalyst filters, this file
     -> per-zoom render: slice points/lines/      operators/render.py
        polygons into tile-local fragments
-    -> shuffle on the 64-bit sort key            the external merge sort
-    -> consecutive-run MVT encode (multi-layer   kernels/mvt.py LayerBuilder
-       tiles with interned attrs)
+    -> range exchange + sort on the 64-bit key   the external merge sort
+    -> consecutive-run MVT encode (multi-layer   operators/partitioning.py
+       tiles with interned attrs, per-tile line  group_by_tile over
+       merge)                                    kernels/mvt.py LayerBuilder
     -> MBTiles / PMTiles / files archive         sources/archives.py
 
 The built-in DEFAULT_PROFILE is a compact OpenMapTiles-flavored schema
@@ -35,7 +36,9 @@ from ..kernels import geom as gk
 from ..kernels import lines as lk
 from ..kernels import mvt
 from ..kernels import tile_math as tm
+from ..operators import partitioning as pt
 from ..operators import render as R
+from ..operators import tile_pipeline as tp
 from ..sources import osm as osrc
 
 # layer rules: (layer, tag key, allowed values or None=any, geom, minzoom,
@@ -148,15 +151,11 @@ def render_osm_features(feats: DataFrame, min_zoom: int = 0,
     shuffle doubles as the archive-order sort — the output tiles land in
     total zoom-major order with no extra exchange, the reference's ordered
     TileArchiveWriter semantics."""
-    from ..operators import partitioning as pt
-
     layer_idx = dict(_LAYER_IDX)
     tok_name = None
     if range_partitions is not None:
-        rp = int(range_partitions)
-        boundaries, pid = pt.tile_range_partitioning(min_zoom, max_zoom, rp)
-        bucket_tok = pt.partition_tokens(feats.sparkSession, rp)[pid]
-        tok_name = pt.token_col(rp)
+        boundaries, bucket_tok, tok_name = pt.range_tokens(
+            feats.sparkSession, min_zoom, max_zoom, int(range_partitions))
 
     def gen(batches):
         for pdf in batches:
@@ -227,10 +226,6 @@ def render_osm_features(feats: DataFrame, min_zoom: int = 0,
     return feats.mapInPandas(gen, schema)
 
 
-TILES_SCHEMA = ("tile_id long, zoom int, x int, y int, n_features long, "
-                "tile_bytes binary, content_hash string")
-
-
 def encode_osm_tiles(frags: DataFrame, partitions: int | None = None,
                      merge_lines: bool = True,
                      feature_per_stroke: bool = False,
@@ -238,115 +233,93 @@ def encode_osm_tiles(frags: DataFrame, partitions: int | None = None,
                      merge_tolerance: float = -1.0,
                      merge_stub_min_length: float = 0.0,
                      merge_strokes: bool = False) -> DataFrame:
-    """Shuffle on the sort key, then consecutive-run multi-layer MVT encode.
+    """Shuffle on the sort key, then multi-layer MVT encode of each
+    consecutive same-tile run (partitioning.group_by_tile). A frame carrying
+    range-exchange tokens (render_osm_features(range_partitions=p) with the
+    same p) comes out in total zoom-major order: the one shuffle is also the
+    archive-order sort.
 
     merge_lines applies the reference's per-tile line post-process
     (FeatureMerge.mergeLineStrings): within a tile, line pieces that share a
     layer AND attrs merge into maximal strokes (kernels/lines.py
     LoopLineMerger analog, endpoint snap at the integer extent grid), one
     multi-linestring feature per attr group — road networks shrink to a few
-    strokes per tile instead of hundreds of segments.
+    strokes per tile instead of hundreds of segments. Layers appear in the
+    tile in order of their first feature; layers that hold only merged lines
+    follow. A tile whose features all merge away is still emitted.
 
     Encode uses LayerBuilder per feature — right for mixed-geometry,
     arbitrary-attr tiles at city/country scale. At planet scale the hot
     layers should route through the vectorized stream encoders instead
     (mvt.PointTileStream / polygon_geom_stream, as the images pipeline
     does); the plumbing here (same sorted-KV shuffle) is unchanged."""
-    import hashlib
-
-    from ..operators import partitioning as pt
-
-    p = int(partitions or frags.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # a matching range-exchange token (render_osm_features(range_partitions=p))
-    # makes this one shuffle ALSO the archive-order sort
-    key = pt.resolve_token_col(frags.columns, p) or "tile_id"
-    shuffled = (frags.repartition(p, key)
-                .sortWithinPartitions("tile_id", "key", "fid"))
     fill_cmds = mvt.encode_fill()
 
-    def encode(batches):
-        cur_tile = None
+    def encode_tile(rows) -> tuple[bytes, int]:
         layers: dict[str, mvt.LayerBuilder] = {}
         nfeat = 0
         line_groups: dict[tuple, list] = {}  # (layer, attrs) -> [fid0, parts]
-
-        def flush():
-            nonlocal layers, nfeat, line_groups
-            if cur_tile is None:
-                return None
-            for (layer, attrs_s), (fid0, parts) in line_groups.items():
-                merged = lk.merge_line_strings(
-                    [np.asarray(pp, dtype=np.float64) for pp in parts],
-                    min_length=merge_min_length,
-                    stub_min_length=merge_stub_min_length,
-                    tolerance=merge_tolerance, grid=1.0,
-                    merge_strokes=merge_strokes)
-                if not merged:
-                    continue
-                lb = layers.get(layer)
-                if lb is None:
-                    lb = layers[layer] = mvt.LayerBuilder(layer)
-                if feature_per_stroke:
-                    # FeatureMerge.mergeLineStrings emits each merged stroke
-                    # as its OWN feature (merge():91-99 returns one
-                    # VectorTile.Feature per merged geometry); the default
-                    # multiline-per-attr-group packs tighter but examples
-                    # that reproduce reference feature counts need this
-                    attrs = json.loads(attrs_s)
-                    for m in merged:
-                        cmds = mvt.encode_geometry(
-                            2, [np.rint(m).astype(np.int64)])
-                        lb.add_feature(fid0, 2, cmds, attrs)
-                        nfeat += 1
+        for fid, layer, ftype, fill, parts_b, attrs_s in rows:
+            if merge_lines and ftype == 2 and not fill:
+                g = line_groups.get((layer, attrs_s))
+                parts = gk.unpack_parts(parts_b)
+                if g is None:
+                    line_groups[(layer, attrs_s)] = [fid, parts]
                 else:
+                    g[1].extend(parts)
+                continue
+            lb = layers.get(layer)
+            if lb is None:
+                lb = layers[layer] = mvt.LayerBuilder(layer)
+            cmds = fill_cmds if fill else mvt.encode_geometry(
+                ftype, gk.unpack_parts(parts_b))
+            lb.add_feature(fid, ftype, cmds, json.loads(attrs_s))
+            nfeat += 1
+        for (layer, attrs_s), (fid0, parts) in line_groups.items():
+            merged = lk.merge_line_strings(
+                [np.asarray(pp, dtype=np.float64) for pp in parts],
+                min_length=merge_min_length,
+                stub_min_length=merge_stub_min_length,
+                tolerance=merge_tolerance, grid=1.0,
+                merge_strokes=merge_strokes)
+            if not merged:
+                continue
+            lb = layers.get(layer)
+            if lb is None:
+                lb = layers[layer] = mvt.LayerBuilder(layer)
+            if feature_per_stroke:
+                # FeatureMerge.mergeLineStrings emits each merged stroke
+                # as its OWN feature (merge():91-99 returns one
+                # VectorTile.Feature per merged geometry); the default
+                # multiline-per-attr-group packs tighter but examples
+                # that reproduce reference feature counts need this
+                attrs = json.loads(attrs_s)
+                for m in merged:
                     cmds = mvt.encode_geometry(
-                        2, [np.rint(m).astype(np.int64) for m in merged])
-                    lb.add_feature(fid0, 2, cmds, json.loads(attrs_s))
-                    nfeat += 1
-            line_groups = {}
-            blob = mvt.encode_tile(list(layers.values()))
-            x, y, z = tm.tile_decode(np.int64(cur_tile))
-            row = (int(cur_tile), int(z), int(x), int(y), nfeat, blob,
-                   hashlib.sha256(blob).hexdigest()[:16])
-            layers = {}
-            nfeat = 0
-            return row
-
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.tile_id != cur_tile:
-                    row = flush()
-                    if row:
-                        out.append(row)
-                    cur_tile = r.tile_id
-                if merge_lines and int(r.ftype) == 2 and not r.fill:
-                    g = line_groups.get((r.layer, r.attrs))
-                    parts = gk.unpack_parts(bytes(r.parts))
-                    if g is None:
-                        line_groups[(r.layer, r.attrs)] = [int(r.fid), parts]
-                    else:
-                        g[1].extend(parts)
-                    continue
-                lb = layers.get(r.layer)
-                if lb is None:
-                    lb = layers[r.layer] = mvt.LayerBuilder(r.layer)
-                cmds = fill_cmds if r.fill else mvt.encode_geometry(
-                    int(r.ftype), gk.unpack_parts(bytes(r.parts)))
-                lb.add_feature(int(r.fid), int(r.ftype), cmds,
-                               json.loads(r.attrs))
+                        2, [np.rint(m).astype(np.int64)])
+                    lb.add_feature(fid0, 2, cmds, attrs)
+                nfeat += len(merged)
+            else:
+                cmds = mvt.encode_geometry(
+                    2, [np.rint(m).astype(np.int64) for m in merged])
+                lb.add_feature(fid0, 2, cmds, json.loads(attrs_s))
                 nfeat += 1
-            if out:
-                yield pd.DataFrame(out, columns=["tile_id", "zoom", "x", "y",
-                                                 "n_features", "tile_bytes",
-                                                 "content_hash"])
-        row = flush()
-        if row:
-            yield pd.DataFrame([row], columns=["tile_id", "zoom", "x", "y",
-                                               "n_features", "tile_bytes",
-                                               "content_hash"])
+        return mvt.encode_tile(list(layers.values())), nfeat
 
-    return shuffled.mapInPandas(encode, TILES_SCHEMA)
+    def reduce_tiles(tbl):
+        tids = tbl.column("tile_id").to_numpy()
+        starts, ends = pt.run_bounds(tids)
+        rows = list(zip(*(tbl.column(c).to_pylist() for c in
+                          ("fid", "layer", "ftype", "fill", "parts", "attrs"))))
+        blobs, nfeat = [], []
+        for s, e in zip(starts, ends):
+            blob, n = encode_tile(rows[s:e])
+            blobs.append(blob)
+            nfeat.append(n)
+        return tp.tile_columns(tids[starts], nfeat, blobs)
+
+    return pt.group_by_tile(frags, partitions, ["key", "fid"], reduce_tiles,
+                            tp.TILE_SCHEMA)
 
 
 def osm_features_yaml(spark: SparkSession, pbf: str, schema) -> DataFrame:

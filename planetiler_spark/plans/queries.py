@@ -2612,25 +2612,6 @@ def knn_hex(spark, sf_dir, k: int = 5, res: int = 2):
     return out.select("c_custkey", "s_suppkey", F.col("rank").cast("long").alias("rank"))
 
 
-def knn_zone_centroids(spark, sf_dir):
-    """k=5 nearest zone centroids per image via the broadcast distance-matrix
-    kNN (PointIndex.getNearest:70 semantics, deterministic tie-breaks).
-
-    Not a registered gate row (the driver caps the gate at 50 queries): kNN
-    semantics are already oracle-verified by knn_bruteforce/knn_grid, and
-    spatial.knn_zones is asserted against a brute-force oracle in
-    tests/test_spatial.py::test_knn_matches_bruteforce_oracle."""
-    from ..operators import spatial as sp
-    from ..sources import images as src
-
-    imgs = src.images_table(spark, _images_n(sf_dir, 1500), partitions=16, with_bytes=False)
-    knn = sp.knn_zones(imgs, k=5)
-    return knn.groupBy("rank").agg(
-        F.count("*").alias("n"),
-        F.countDistinct("zone_id").alias("n_zones"),
-        F.sum(F.expr("CAST(round(d2 * 1000000000) AS BIGINT)")).alias("sum_d2_ppb"))
-
-
 def _zones_tileset_oracle() -> str:
     """DuckDB replay of the POLYGON render path (rows-only until round 5) over
     the dyadic rect-zone fixture (src.rect_zone_coords): per zoom 0-6, the

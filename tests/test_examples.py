@@ -4,16 +4,46 @@ verified against the reference's OWN integration expectations."""
 from __future__ import annotations
 
 import os
+import struct
 
 import pytest
 
 MONACO = ("/root/reference/planetiler-core/src/test/resources/"
           "monaco-latest.osm.pbf")
 
-pytestmark = pytest.mark.skipif(not os.path.exists(MONACO),
-                                reason="reference monaco fixture absent")
+needs_monaco = pytest.mark.skipif(not os.path.exists(MONACO),
+                                  reason="reference monaco fixture absent")
 
 
+def _wkb_polygon(rings):
+    import numpy as np
+
+    out = b"\x01" + struct.pack("<I", 3) + struct.pack("<I", len(rings))
+    for r in rings:
+        out += struct.pack("<I", len(r)) + np.asarray(r, "<f8").tobytes()
+    return out
+
+
+def _buildings_parquet(path, ids):
+    """One small square building per entry of `ids` (None = no id column)
+    as GeoParquet-shaped rows: WKB geometry plus bbox columns."""
+    import pandas as pd
+
+    rows = []
+    for i in range(len(ids)):
+        lon, lat = 7.41 + 0.002 * i, 43.73
+        ring = [[lon, lat], [lon + 3e-4, lat], [lon + 3e-4, lat + 2e-4],
+                [lon, lat + 2e-4], [lon, lat]]
+        rows.append((_wkb_polygon([ring]), lon, lat, lon + 3e-4, lat + 2e-4))
+    pdf = pd.DataFrame(rows, columns=["geometry", "minx", "miny", "maxx",
+                                      "maxy"])
+    if any(v is not None for v in ids):
+        pdf.insert(0, "id", ids)
+    pdf.to_parquet(path)
+    return str(path)
+
+
+@needs_monaco
 def test_toilets_overlay_matches_reference_integration(spark, tmp_path):
     """ToiletsProfileTest:68-69 asserts the monaco build yields 34 point
     features in the toilets layer at z14 (29 nodes + tile-buffer
@@ -42,6 +72,7 @@ def test_toilets_overlay_matches_reference_integration(spark, tmp_path):
                for a, b in zip(zooms[:-1], zooms[1:]))
 
 
+@needs_monaco
 def test_bike_route_overlay_on_monaco(spark, tmp_path):
     """BikeRouteOverlay semantics on the reference's monaco fixture: one
     relation (EuroVelo 8, icn -> international), 81 member ways, per-tile
@@ -102,6 +133,7 @@ def test_stroke_merge_pairs_straightest():
     assert len(out) == 1 and len(out[0]) == 4
 
 
+@needs_monaco
 def test_osm_qa_tiles_golden_element(spark, tmp_path):
     """OsmQaTilesTest:100-110: the monaco build carries node 1699777833
     (bus stop Crémaillère) at z12 exactly once, as a point, with all its
@@ -136,20 +168,12 @@ def test_overture_basemap_buildings(spark, tmp_path):
     hole (this exercised a real bug: the multipolygon nesting containment
     ran on raw world coordinates, where the shoelace centroid of a
     building-sized ring cancels catastrophically)."""
-    import struct
-
     import numpy as np
     import pandas as pd
 
     from planetiler_spark.examples import overture_basemap as ex
     from planetiler_spark.kernels import mvt
     from planetiler_spark.sources import archives as ar
-
-    def wkb_polygon(rings):
-        out = b"\x01" + struct.pack("<I", 3) + struct.pack("<I", len(rings))
-        for r in rings:
-            out += struct.pack("<I", len(r)) + np.asarray(r, "<f8").tobytes()
-        return out
 
     rng = np.random.default_rng(5)
     rows = []
@@ -159,7 +183,7 @@ def test_overture_basemap_buildings(spark, tmp_path):
         w, h = 0.0003, 0.0002
         ring = [[lon, lat], [lon + w, lat], [lon + w, lat + h],
                 [lon, lat + h], [lon, lat]]
-        rows.append((i, wkb_polygon([ring]), float(rng.integers(3, 60)),
+        rows.append((i, _wkb_polygon([ring]), float(rng.integers(3, 60)),
                      "#a08060", lon, lat, lon + w, lat + h))
     lon, lat, w = 7.42, 43.73, 0.001
     outer = [[lon, lat], [lon + w, lat], [lon + w, lat + w],
@@ -167,7 +191,7 @@ def test_overture_basemap_buildings(spark, tmp_path):
     inner = [[lon + w * .3, lat + w * .3], [lon + w * .7, lat + w * .3],
              [lon + w * .7, lat + w * .7], [lon + w * .3, lat + w * .7],
              [lon + w * .3, lat + w * .3]]
-    rows.append((100, wkb_polygon([outer, inner]), 25.0, None,
+    rows.append((100, _wkb_polygon([outer, inner]), 25.0, None,
                  lon, lat, lon + w, lat + w))
     pdf = pd.DataFrame(rows, columns=["id", "geometry", "height",
                                       "roof_color", "minx", "miny",
@@ -188,3 +212,38 @@ def test_overture_basemap_buildings(spark, tmp_path):
     assert total >= 13 * 2  # every building at both zooms (+ buffer dupes)
     assert max_rings == 2   # the donut keeps its hole
     assert "25.0" in heights
+
+
+def test_overture_string_ids_map_to_stable_int64(spark, tmp_path):
+    """Overture GERS ids are hex strings: each maps to the first 8 bytes of
+    its sha256 as a signed int64, the same value on every run."""
+    import hashlib
+
+    from planetiler_spark.examples import overture_basemap as ex
+
+    ids = ["08b2a100d2c8dfff0200e1f6d8c1d7b5", "08b2a100d2c8dfff0200a1b2c3d4e5f6",
+           "not-hex-at-all"]
+    src = _buildings_parquet(tmp_path / "b.parquet", ids)
+    got = sorted(r.fid for r in ex.overture_features(spark, src).collect())
+    want = sorted(int.from_bytes(hashlib.sha256(i.encode()).digest()[:8],
+                                 "big", signed=True) for i in ids)
+    assert got == want
+
+
+def test_overture_missing_ids_unique_across_batches(spark, tmp_path):
+    """Without an id column every feature still gets its own id, also when
+    the input arrives in several Arrow batches."""
+    from planetiler_spark.examples import overture_basemap as ex
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    src = _buildings_parquet(tmp_path / "b.parquet", [None] * 10)
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, "3")
+    try:
+        fids = [r.fid for r in ex.overture_features(spark, src).collect()]
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+    assert len(fids) == 10 and len(set(fids)) == 10

@@ -249,7 +249,7 @@ def test_incremental_scan_drives_tile_refresh(spark, tmp_path):
 
     got = tile_map(stl.read_tiles(spark, out).collect())
     full = ib.read_iceberg(spark, t).drop("bucket")
-    want = tile_map(tp.tileset(spark, full, 0, 6, ordered=False).collect())
+    want = tile_map(tp.tileset(spark, full, 0, 6).collect())
     assert got == want
 
 

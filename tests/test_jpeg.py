@@ -136,13 +136,11 @@ def test_decoder_rejects_garbage_and_truncation():
         J.decode_jpeg(buf[:40])  # headers cut off
 
 
-def test_decode_image_dispatch_and_legacy_fjpg():
+def test_decode_image_dispatch():
     px = _pixels(6, 64, 64)
     real = ik.encode_image(px, "jpeg")
     assert real[:2] == b"\xFF\xD8"
     assert ik.psnr(px, ik.decode_image(real, "jpeg")) >= 40.0
-    legacy = ik.encode_fake_jpeg(px)
-    assert ik.psnr(px, ik.decode_image(legacy, "jpeg")) >= 40.0
 
 
 def test_grayscale_single_component_stream():

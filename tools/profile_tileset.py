@@ -14,8 +14,6 @@ Usage: taskset -c 0-11 python tools/profile_tileset.py --cpus 12 \
 from __future__ import annotations
 
 import argparse
-import glob
-import json
 import os
 import sys
 import time
@@ -76,7 +74,7 @@ def main():
     else:
         tiles = tp.tileset(spark, images, 0, args.maxzoom,
                            shuffle_partitions=args.shuffle_partitions,
-                           ordered=False, packed=bool(args.packed))
+                           packed=bool(args.packed))
         agg = tiles.agg(F.count("*").alias("nt"), F.sum("n_features").alias("nf")).collect()[0]
         wall = time.time() - t0
         print(f"tileset wall {wall:.2f}s  tiles={agg.nt} features={agg.nf}")
@@ -84,67 +82,30 @@ def main():
     spark.stop()
 
     # ---- parse the event log ----
-    logs = sorted(glob.glob(evdir + "/*"), key=os.path.getmtime)
-    src = logs[-1]
-    if os.path.isdir(src):  # eventlog v2 rolling dir
-        parts = sorted(glob.glob(src + "/events_*") or glob.glob(src + "/*"))
-        parts = [p for p in parts if os.path.isfile(p) and "appstatus" not in p]
-    else:
-        parts = [src]
-    stages = {}  # id -> dict
-    tasks = {}   # stage id -> list of (launch, finish)
-    import io
-    lines = io.StringIO("".join(open(p).read() for p in parts))
-    if True:
-        for ln in lines:
-            try:
-                ev = json.loads(ln)
-            except json.JSONDecodeError:
-                continue
-            e = ev.get("Event")
-            if e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                stages[si["Stage ID"]] = {
-                    "name": si["Stage Name"].split(" at ")[0][:40],
-                    "ntasks": si["Number of Tasks"],
-                    "sub": si.get("Submission Time"),
-                    "done": si.get("Completion Time"),
-                }
-            elif e == "SparkListenerTaskEnd":
-                ti = ev["Task Info"]
-                tasks.setdefault(ev["Stage ID"], []).append(
-                    (ti["Launch Time"], ti["Finish Time"]))
+    from tilebench.stages import parse_events, read_event_lines
 
+    log = parse_events(read_event_lines(evdir))
     rows = []
-    for sid in sorted(stages):
-        s = stages[sid]
-        ts = tasks.get(sid, [])
-        if not ts or s["sub"] is None:
-            continue
-        first = min(t[0] for t in ts)
-        last = max(t[1] for t in ts)
-        tasksum = sum(t[1] - t[0] for t in ts) / 1000.0
-        stage_wall = (last - first) / 1000.0
-        # tail: wall of the stage after 90% of task-time has completed
-        finishes = sorted(t[1] for t in ts)
-        p90_done = finishes[max(0, int(len(finishes) * 0.9) - 1)]
-        tail = (last - p90_done) / 1000.0
-        rows.append((sid, s["name"], s["ntasks"], (first - t0_abs_ms) / 1000.0,
-                     stage_wall, tasksum, tail, last))
+    for sid, st in sorted(log.stages.items()):
+        tasksum = sum(f - l for l, f in st.tasks) / 1000.0
+        rows.append((sid, st.job_id, len(st.tasks),
+                     (st.start_ms - t0_abs_ms) / 1000.0,
+                     (st.end_ms - st.start_ms) / 1000.0, tasksum,
+                     st.tail_ms() / 1000.0, st.end_ms))
 
     rows.sort(key=lambda r: r[3])
-    print(f"\n{'sid':>4} {'stage':40} {'nt':>4} {'t0':>7} {'wall':>7} "
+    print(f"\n{'sid':>4} {'job':>4} {'nt':>4} {'t0':>7} {'wall':>7} "
           f"{'tasksum':>8} {'cpu-occ':>7} {'tail90':>7}")
     covered_end = t0_abs_ms
     gap_total = 0.0
-    for sid, name, nt, rel0, w, tsum, tail, last in rows:
+    for sid, job, nt, rel0, w, tsum, tail, last in rows:
         start_abs = t0_abs_ms + rel0 * 1000
         gap = max(0.0, (start_abs - covered_end) / 1000.0)
         gap_total += gap
         covered_end = max(covered_end, last)
         occ = tsum / (w * args.cpus) if w > 0 else 0
         flag = f"  GAP {gap:.2f}s before" if gap > 0.3 else ""
-        print(f"{sid:>4} {name:40} {nt:>4} {rel0:>7.2f} {w:>7.2f} "
+        print(f"{sid:>4} {job:>4} {nt:>4} {rel0:>7.2f} {w:>7.2f} "
               f"{tsum:>8.1f} {occ:>7.1%} {tail:>7.2f}{flag}")
     end_gap = max(0.0, (t0_abs_ms + wall * 1000 - covered_end) / 1000.0)
     print(f"\ntotal driver gap (no stage running): {gap_total:.2f}s "
